@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..exprs import splitmix64
 from ..io import load
+from ..plans.tuning import broadcast_under_checkpoint
 from ..registry import query
 
 N_MINHASH = 32  # minhash signature length (est_jaccard uses all 32)
@@ -56,13 +57,6 @@ def _tokens(col: str = "text"):
 # every intermediate stays below 2^61: DuckDB ERRORS on BIGINT overflow
 # (Spark wraps silently), so the bound is a correctness requirement of
 # the twin, not a style choice. h < 2^30, a,b < P = 2^31-1.
-# Size guard for dedup_components' per-round nbr_min broadcast (r14,
-# the graph_kcore finding): hint only while the previous round's
-# MATERIALIZED labels checkpoint (which bounds nbr_min) is under this
-# many bytes; at corpus scale the guard fails and the join stays
-# AQE-driven.
-_COMPONENTS_BCAST_MAX_BYTES = 64 << 20
-
 _MH_P = 2147483647  # 2^31 - 1 (prime)
 _MH_TOKEN_MOD = 1 << 30
 _BAND_MULT = 1000003  # band-hash fold multiplier; P·mult < 2^52
@@ -820,6 +814,48 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _min_label_components(
+    edges: DataFrame, labels: DataFrame, node: str, label: str
+) -> DataFrame:
+    """Connected components by min-label propagation: each round every
+    node takes the min of its own and its neighbors' labels; converged
+    when a round changes nothing (≤ graph diameter rounds). ``edges``
+    holds (u, v) with both directions present — u pulls v's label;
+    ``labels`` holds ``node``, ``label`` and any passthrough columns,
+    which ride along unchanged. Returns the converged labels.
+
+    Each round is one join+groupBy on the edge list plus a LAZY
+    lineage-cutting localCheckpoint, so the plan does not grow with
+    rounds. Convergence: labels only ever decrease, so the label sum is
+    a strictly decreasing potential — two consecutive rounds with equal
+    sums ⇔ fixpoint. That one cheap aggregate per round also
+    materializes the round's checkpoint: ONE job per round. nbr_min
+    has at most one row per edge, so the neighbor-min join is
+    broadcast-hinted while the materialized ``edges`` checkpoint is
+    small; past the guard the join stays AQE-driven."""
+    keep = [c for c in labels.columns if c != label]
+    prev_sum = None
+    for _ in range(50):
+        nbr_min = (
+            edges.join(labels, edges.v == labels[node])
+            .groupBy(F.col("u").alias(node))
+            .agg(F.min(label).alias("nbr_min"))
+        )
+        labels = (
+            labels.join(broadcast_under_checkpoint(nbr_min, edges), node, "left")
+            .select(
+                *keep,
+                F.least(F.col(label), F.coalesce("nbr_min", label)).alias(label),
+            )
+            .localCheckpoint(eager=False)
+        )
+        new_sum = labels.agg(F.sum(label)).collect()[0][0]  # driver-scalar: convergence potential (materializes the lazy checkpoint)
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    return labels
+
+
 @query(
     "dedup_components",
     oracle="""
@@ -851,13 +887,10 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     component. This closes the gap one-hop canonicals leave
     (A~B, B~C but A≁C still end up in ONE group here).
 
-    The one genuinely ITERATIVE algorithm in the registry, and the only
-    driver-loop use: min-label propagation — each round every node
-    takes the min of its own and its neighbors' labels; converged when
-    a round changes nothing (≤ graph diameter rounds; near-clique
-    template clusters converge in 2-3). Each round is a distributed
-    join+groupBy on the (tiny, pairs-sized) edge list; localCheckpoint
-    truncates lineage so the plan doesn't grow with rounds. The oracle
+    A genuinely ITERATIVE, converge-until-fixpoint algorithm:
+    min-label propagation (_min_label_components, shared with
+    dedup_semantic_clusters) over the (tiny, pairs-sized) edge list;
+    near-clique template clusters converge in 2-3 rounds. The oracle
     is a DuckDB RECURSIVE CTE computing min-reachable-id — a full
     value-level check of an iterative distributed algorithm.
 
@@ -866,63 +899,17 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameters switch to pointer-jumping (label = label[label]) for
     O(log n) rounds — same loop shape.
     """
-    from .graph import _latest_ckpt_bytes
-
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=True)
-    # LAZY checkpoints in the loop (r14): the per-round convergence-sum
-    # action materializes the round's checkpoint, so each round is ONE
-    # job, not two — the trick dedup_semantic_clusters' label rounds
-    # already use; this loop predates it and still paid the eager
-    # checkpoint job PLUS the sum job per round.
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
+    )
+    edges = pairs.union(pairs.select("v", "u")).localCheckpoint(eager=True)
     labels = (
         load(spark, sf_dir, "documents")
         .select("doc_id")
         .withColumn("component_id", F.col("doc_id"))
         .localCheckpoint(eager=False)
     )
-    # Convergence check: labels only ever DECREASE, so the label sum is
-    # a strictly decreasing potential — sum unchanged ⇔ fixpoint. One
-    # cheap aggregate action per round instead of a join-and-count.
-    prev_sum = labels.agg(F.sum("component_id")).collect()[0][0]  # driver-scalar: convergence potential
-    labels_bytes = _latest_ckpt_bytes(spark)
-    for _ in range(50):
-        nbr_min = (
-            edges.join(labels, edges.doc_b == labels.doc_id)
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("component_id").alias("nbr_min"))
-        )
-        # Size-guarded broadcast (r14, the graph_kcore finding): AQE
-        # promotes this left join to BHJ only AFTER the initial SMJ
-        # plan has shuffled the labels relation as a query stage — a
-        # wasted doc-grain shuffle per round. nbr_min is bounded by
-        # the labels relation whose materialized bytes the previous
-        # round's checkpoint just told us, so under the guard the
-        # hint is safe; past it (corpus-scale labels) the join stays
-        # AQE-driven.
-        nbrj = (
-            F.broadcast(nbr_min)
-            if 0 < labels_bytes < _COMPONENTS_BCAST_MAX_BYTES
-            else nbr_min
-        )
-        labels = (
-            labels.join(nbrj, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component_id"), F.coalesce("nbr_min", "component_id")
-                ).alias("component_id"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("component_id")).collect()[0][0]  # driver-scalar: convergence potential (materializes the lazy checkpoint)
-        labels_bytes = _latest_ckpt_bytes(spark)
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels
+    return _min_label_components(edges, labels, "doc_id", "component_id")
 
 
 @query(
@@ -1489,11 +1476,11 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens): Lloyd k-means assignments (emb_kmeans_lloyd's exact
     integer trajectory, via the shared _kmeans_final) become the
     blocking key, cosine ≥ 0.3 pairs generate WITHIN each learned
-    cluster only, and min-label propagation (dedup_components' loop)
-    closes them into transitive semantic groups. Output: one row per
-    vector with its kmeans cluster and its semantic component id
-    (min vec_id reachable) — semantic_id == vec_id means the vector
-    is its group's canonical (or a singleton).
+    cluster only, and min-label propagation (_min_label_components,
+    shared with dedup_components) closes them into transitive semantic
+    groups. Output: one row per vector with its kmeans cluster and its
+    semantic component id (min vec_id reachable) — semantic_id ==
+    vec_id means the vector is its group's canonical (or a singleton).
 
     Exactness: the kmeans leg is the replayed-recurrence pattern (the
     oracle re-runs the identical unrolled CTE chain — bitwise-equal
@@ -1510,13 +1497,10 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connectivity-identical within the tile, linear output, and the
     distributed min-label rounds then only pay for CROSS-TILE
     merging (single-tile clusters converge in one pull + one verify
-    round instead of graph-diameter rounds: 7 → 2 at sf0.1). Label
-    propagation runs join+groupBy rounds on the (star-edge-sized)
-    list with LAZY lineage-cutting checkpoints — the per-round sum
-    action materializes the round's checkpoint, so each round is ONE
-    job, not two. At 100 TB each stage keeps the shape: assignment
-    is map-side, pairs are cluster-local tiles, components touch
-    only edges."""
+    round instead of graph-diameter rounds: 7 → 2 at sf0.1), one job
+    per round over the star-edge-sized list. At 100 TB each stage
+    keeps the shape: assignment is map-side, pairs are cluster-local
+    tiles, components touch only edges."""
     import numpy as np
     import pandas as pd
 
@@ -1576,36 +1560,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = asg.withColumn("semantic_id", F.col("vec_id")).localCheckpoint(
         eager=False
     )
-    # Labels only ever decrease → the label sum is a strictly
-    # decreasing potential; two consecutive rounds with equal sums ⇔
-    # fixpoint (the dedup_components convergence check, minus the
-    # separate initial-sum job — consecutive comparison saves one
-    # action). The agg action doubles as the checkpoint materializer
-    # (lazy ckpt: one job per round).
-    prev_sum = None
-    for _ in range(50):
-        nbr_min = (
-            edges.join(labels, edges.v == labels.vec_id)
-            .groupBy(F.col("u").alias("vec_id"))
-            .agg(F.min("semantic_id").alias("nbr_min"))
-        )
-        labels = (
-            labels.join(nbr_min, "vec_id", "left")
-            .select(
-                "vec_id",
-                "cid",
-                F.least(
-                    F.col("semantic_id"),
-                    F.coalesce("nbr_min", "semantic_id"),
-                ).alias("semantic_id"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("semantic_id")).collect()[0][0]  # driver-scalar: convergence potential
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels.select("vec_id", "cid", "semantic_id").orderBy("vec_id")
+    return _min_label_components(edges, labels, "vec_id", "semantic_id").orderBy(
+        "vec_id"
+    )
 
 
 @query(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
+from ..plans.tuning import broadcast_under_checkpoint
 from ..registry import query
 
 _DAMPING = 0.85
@@ -673,27 +674,6 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KCORE_K = 12
 _KCORE_ROUNDS = 5
-# Size guard for the per-round deg broadcast (r14): deg is node-grain
-# and strictly smaller than the edge set it aggregates, so broadcasting
-# it is safe whenever the round's MATERIALIZED edge checkpoint is under
-# this many bytes (mem+disk, read from the block manager — no extra
-# job). 64 MB keeps the built hash relation comfortably inside executor
-# memory at any core count; at graph scale the guard fails and the
-# joins stay AQE-driven (demotable, skew-handled).
-_KCORE_BCAST_EDGE_BYTES = 64 << 20
-
-
-def _latest_ckpt_bytes(spark: SparkSession) -> int:
-    """mem+disk bytes of the newest persisted RDD — right after an
-    eager localCheckpoint that is the checkpoint just materialized
-    (RDD ids are monotonic). Metadata read only; no job."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    if not infos:
-        return 0
-    newest = max(infos, key=lambda i: i.id())
-    return int(newest.memSize() + newest.diskSize())
-
-
 def _kcore_oracle() -> str:
     """Unrolled peeling: each round keeps nodes with degree ≥ k in the
     CURRENT edge set, then keeps edges with both ends kept. Five
@@ -791,23 +771,22 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round wall is job-barrier-dominated, not join-dominated.)
 
     r14 (VERDICT r13 Next #3): the executed per-round plans
-    (plans/r14/graph_kcore_round3_executed.txt) show AQE DOES promote
+    (plans/r14/graph_kcore_round3_before.txt) show AQE DOES promote
     both endpoint joins to BroadcastHashJoin at sf0.1 — but only
     after the initial SortMergeJoin plan has already SHUFFLED the
     edge relation by pa as a materialized ShuffleQueryStage (AQE
     converts the join, not the already-submitted exchange), so every
     round pays one full shuffle write of the edge set that the r12
     compile-time hint never paid (A/B: hint-free 2.93/3.24 vs hinted
-    2.68/2.97 s min/med of 7). Fix: a SIZE-GUARDED broadcast — the
+    2.68/2.97 s min/med of 7; _after.txt is the hinted round). Fix: a
+    SIZE-GUARDED broadcast (tuning.broadcast_under_checkpoint) — the
     round's edge set is eagerly checkpointed, so its materialized
-    bytes are known for free from the block manager
-    (getRDDStorageInfo); deg (node-grain) is strictly smaller than
-    the edge set it aggregates, so when the checkpointed edge bytes
-    are under _KCORE_BCAST_EDGE_BYTES the hint is provably safe and
-    is applied, and at graph scale the guard fails and the plan
-    stays AQE-driven (demotable, skew-handled) — no unconditional
-    data-grain hint (pinned by the test: threshold 0 ⇒ zero
-    F.broadcast calls)."""
+    bytes are known for free from the block manager; deg (node-grain)
+    is strictly smaller than the edge set it aggregates, so under the
+    guard the hint is provably safe, and at graph scale the guard
+    fails and the plan stays AQE-driven (demotable, skew-handled) —
+    no unconditional data-grain hint (pinned by the test: threshold
+    0 ⇒ zero F.broadcast calls)."""
     li = load(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_orderkey") % 5 == 0).select(
         "l_orderkey", "l_partkey"
@@ -821,7 +800,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    e_bytes = _latest_ckpt_bytes(spark)
     prev_e = e
     kept_nodes: DataFrame | None = None  # the oracle's n{r} relation
     prev_kept: DataFrame | None = None
@@ -830,20 +808,14 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_kept = kept_nodes
         # ONE job per round: deg stays lazy (two copies of the
         # degree aggregate over the CHECKPOINTED edge RDD — bounded,
-        # no re-expansion) and joins into both endpoint joins.
-        # Join strategy (r14, VERDICT r13 Next #3): when the round's
-        # materialized edge checkpoint is small, deg (node-grain,
-        # strictly smaller) gets an explicit broadcast hint — the
-        # AQE SMJ→BHJ conversion happens only AFTER the initial plan
-        # has shuffled the edge set as a query stage, so the hint
-        # removes one full edge shuffle per round; past the size
-        # guard the joins stay stats/AQE-driven (no hard hint on a
-        # graph-scale relation).
-        # the single eager checkpoint is the round barrier. Local-mode
-        # wall clock is dominated by these per-round job barriers
-        # (~0.3 s each), not data — the in-process twin wins at
-        # fixture scale exactly the way BASELINE.md's scheduling-
-        # floor profile describes, and the ratio inverts with size.
+        # no re-expansion) and joins into both endpoint joins; deg is
+        # node-grain, strictly smaller than the edge checkpoint e that
+        # bounds its broadcast hint. The single eager checkpoint is
+        # the round barrier. Local-mode wall clock is dominated by
+        # these per-round job barriers (~0.3 s each), not data — the
+        # in-process twin wins at fixture scale exactly the way
+        # BASELINE.md's scheduling-floor profile describes, and the
+        # ratio inverts with size.
         deg = (
             e.select(F.col("pa").alias("node"))
             .unionAll(e.select(F.col("pb").alias("node")))
@@ -853,18 +825,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node")
         )
         kept_nodes = deg
-        degj = (
-            F.broadcast(deg)
-            if 0 < e_bytes < _KCORE_BCAST_EDGE_BYTES
-            else deg
-        )
+        degj = broadcast_under_checkpoint(deg, e)
         e = (
             e.join(degj.withColumnRenamed("node", "pa"), "pa")
             .join(degj.withColumnRenamed("node", "pb"), "pb")
             .select("pa", "pb")
             .localCheckpoint(eager=True)
         )
-        e_bytes = _latest_ckpt_bytes(spark)
 
     # one degree pass per edge set yields the edge-side stats:
     # min degree directly and |E| = Σdeg/2 (handshake identity).

@@ -13,6 +13,9 @@ intent explicit and testable.
   task carry 1% of 100 TB; salting splits it across SALT buckets. AQE
   skew-join handles moderate skew automatically — salting is for the
   pathological tail.
+- ``broadcast_under_checkpoint``: the iterative builders' per-round
+  hint — broadcast only while a materialized checkpoint that bounds
+  the relation is small; at 100 TB the guard fails and AQE decides.
 - ``explain_str`` / plan predicates: regression-guard the plan shape
   (pushdown reached the scan, the dim got broadcast, sort+limit fused
   to TakeOrderedAndProject) — at 100 TB a silently degraded plan is an
@@ -54,6 +57,38 @@ def salted_join(
     )
     out = big_s.join(small_s, [key, "_salt"], how)
     return out.drop("_salt")
+
+
+# Ceiling for broadcast_under_checkpoint: keeps the built hash relation
+# comfortably inside executor memory at any core count.
+BROADCAST_CKPT_MAX_BYTES = 64 << 20
+
+
+def checkpoint_bytes(ckpt: DataFrame) -> int:
+    """mem+disk bytes the block manager holds for ``ckpt``'s OWN
+    checkpoint RDD (looked up by id, so a persist made in between cannot
+    stand in for it); 0 while a lazy checkpoint is unmaterialized.
+    Metadata read only; no job."""
+    rdd_id = ckpt._jdf.queryExecution().analyzed().rdd().id()
+    jsc = ckpt.sparkSession.sparkContext._jsc.sc()
+    for info in jsc.getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return int(info.memSize() + info.diskSize())
+    return 0
+
+
+def broadcast_under_checkpoint(df: DataFrame, bound: DataFrame) -> DataFrame:
+    """Broadcast-hint ``df`` only while the checkpoint ``bound``, whose
+    size bounds df's, is materialized and under BROADCAST_CKPT_MAX_BYTES.
+
+    Why a hint at all: in an iterative builder AQE promotes a small-side
+    join to BroadcastHashJoin only AFTER the initial SortMergeJoin plan
+    has shuffled the other side as a query stage — one wasted shuffle
+    per round (plans/r14/graph_kcore_round3_before.txt vs _after.txt).
+    Why guarded: a hard hint can never be demoted, so past the ceiling
+    (or with no size known) the join stays AQE-driven."""
+    size = checkpoint_bytes(bound)
+    return F.broadcast(df) if 0 < size < BROADCAST_CKPT_MAX_BYTES else df
 
 
 def explain_str(df: DataFrame, mode: str = "formatted", run: bool = False) -> str:

@@ -123,8 +123,7 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     # sweep fix lives in plans/advisor.py) + the 4 stalest greens
     # (tpch_q6..q9, r3-era, deferred from the r13 rotation) + the 4
     # next-stalest r4 greens to fill 50 (tools/staleness.py proposal).
-    # Operators touched in r14 are folded in at round close (final
-    # round: this is their only chance at a driver hash row):
+    # Operators touched in r14 are folded in at round close:
     # dedup_components (lazy round checkpoints + size-guarded nbr_min
     # broadcast) replaced the agg_regression fill; graph_kcore and
     # text_char_bigram_entropy (also r14-touched) were already in.

@@ -124,13 +124,13 @@ def test_no_collect_inside_operators():
                     else:
                         offenders.append(f"{py.name}:{i}:{bad}")
     assert not offenders, offenders
-    assert marked == 9, (
-        "expected exactly the 2 dedup_components convergence scalars, "
+    assert marked == 7, (
+        "expected exactly the _min_label_components convergence scalar "
+        "(shared by dedup_components and dedup_semantic_clusters), "
         "the emb_pca_project moment row, the join_skew_aqe flag "
         "materialization, the 2 emb_kmeans_lloyd centroid round-trips, "
-        "the seq_markov_stationary transition-count collect, the "
-        "eval_cluster_purity centroid round-trip, and the "
-        "dedup_semantic_clusters convergence scalar, "
+        "the seq_markov_stationary transition-count collect, and the "
+        "eval_cluster_purity centroid round-trip, "
         f"found {marked}"
     )
 
@@ -253,8 +253,8 @@ def test_graph_iterative_joins_carry_no_hard_broadcast_hints(spark, sf_dir):
     calls: list[int] = []
     real = graph_mod.F.broadcast
     graph_mod.F.broadcast = lambda df: (calls.append(1), real(df))[1]
-    real_thresh = graph_mod._KCORE_BCAST_EDGE_BYTES
-    graph_mod._KCORE_BCAST_EDGE_BYTES = 0
+    real_thresh = tuning.BROADCAST_CKPT_MAX_BYTES
+    tuning.BROADCAST_CKPT_MAX_BYTES = 0
     try:
         for name in ("graph_kcore", "graph_adamic_adar"):
             df = registry.specs()[name].builder(spark, sf_dir)
@@ -263,25 +263,25 @@ def test_graph_iterative_joins_carry_no_hard_broadcast_hints(spark, sf_dir):
         # conditionality, other direction: at the test SF the guard
         # passes and the hint IS applied — the size check is live, not
         # dead code.
-        graph_mod._KCORE_BCAST_EDGE_BYTES = real_thresh
+        tuning.BROADCAST_CKPT_MAX_BYTES = real_thresh
         registry.specs()["graph_kcore"].builder(spark, sf_dir)
         assert calls, "kcore size guard never fired at test SF"
     finally:
         graph_mod.F.broadcast = real
-        graph_mod._KCORE_BCAST_EDGE_BYTES = real_thresh
+        tuning.BROADCAST_CKPT_MAX_BYTES = real_thresh
 
 
 def test_dedup_components_broadcast_is_size_guarded(spark, sf_dir):
-    """r14: dedup_components' per-round left join hints nbr_min ONLY
-    while the previous round's materialized labels checkpoint is under
-    the size guard (the graph_kcore finding: AQE promotes the join to
-    BHJ only after the initial plan has shuffled labels as a query
-    stage — one wasted doc-grain shuffle per round). Pin the
-    conditionality: threshold 0 ⇒ the builder never calls F.broadcast
-    (no hard hint on a corpus-scale relation); default threshold ⇒ the
-    hint fires at test SF (the guard is live). The builder executes its
-    convergence loop, so this also re-proves value stability under
-    both settings."""
+    """r14: the min-label components loop (dedup_components and
+    dedup_semantic_clusters) hints nbr_min ONLY while the materialized
+    edge checkpoint that bounds it is under the size guard (the
+    graph_kcore finding: AQE promotes the join to BHJ only after the
+    initial plan has shuffled labels as a query stage — one wasted
+    doc-grain shuffle per round). Pin the conditionality per builder:
+    threshold 0 ⇒ the builder never calls F.broadcast (no hard hint on
+    a corpus-scale relation); default threshold ⇒ the hint fires at
+    test SF (the guard is live). The builders execute their convergence
+    loop, so this also re-proves value stability under both settings."""
     from data_integration_tool_spark import registry
     from data_integration_tool_spark.operators import dedup as dedup_mod
 
@@ -289,34 +289,60 @@ def test_dedup_components_broadcast_is_size_guarded(spark, sf_dir):
     real_f = dedup_mod.F
 
     class _FProxy:
-        """Counts F.broadcast calls made from dedup.py ONLY — patching
-        the shared functions module would also count the legitimate
-        bounded broadcast inside pair_blocks.tile_pair_blocks."""
+        """Counts F.broadcast calls made from dedup.py and the guard
+        helper ONLY — patching the shared functions module would also
+        count the legitimate bounded broadcast inside
+        pair_blocks.tile_pair_blocks."""
 
         def __getattr__(self, name):
             if name == "broadcast":
                 return lambda df: (calls.append(1), real_f.broadcast(df))[1]
             return getattr(real_f, name)
 
-    dedup_mod.F = _FProxy()
-    real_thresh = dedup_mod._COMPONENTS_BCAST_MAX_BYTES
-    dedup_mod._COMPONENTS_BCAST_MAX_BYTES = 0
+    dedup_mod.F = tuning.F = _FProxy()
+    real_thresh = tuning.BROADCAST_CKPT_MAX_BYTES
     try:
-        guarded_off = registry.specs()["dedup_components"].builder(
-            spark, sf_dir
-        ).collect()
-        assert not calls, "components re-grew a hard broadcast hint"
-        dedup_mod._COMPONENTS_BCAST_MAX_BYTES = real_thresh
-        guarded_on = registry.specs()["dedup_components"].builder(
-            spark, sf_dir
-        ).collect()
-        assert calls, "components size guard never fired at test SF"
-        assert sorted(map(tuple, guarded_off)) == sorted(
-            map(tuple, guarded_on)
-        )
+        for name in ("dedup_components", "dedup_semantic_clusters"):
+            calls.clear()
+            tuning.BROADCAST_CKPT_MAX_BYTES = 0
+            guarded_off = registry.specs()[name].builder(spark, sf_dir).collect()
+            assert not calls, f"{name} re-grew a hard broadcast hint"
+            tuning.BROADCAST_CKPT_MAX_BYTES = real_thresh
+            guarded_on = registry.specs()[name].builder(spark, sf_dir).collect()
+            assert calls, f"{name} size guard never fired at test SF"
+            assert sorted(map(tuple, guarded_off)) == sorted(
+                map(tuple, guarded_on)
+            )
     finally:
-        dedup_mod.F = real_f
-        dedup_mod._COMPONENTS_BCAST_MAX_BYTES = real_thresh
+        dedup_mod.F = tuning.F = real_f
+        tuning.BROADCAST_CKPT_MAX_BYTES = real_thresh
+
+
+def test_checkpoint_bytes_reads_the_checkpoints_own_rdd(spark):
+    """The broadcast guard sizes a checkpoint by ITS OWN RDD id, so a
+    persist made between the checkpoint and the size read cannot stand
+    in for it (a newest-RDD lookup returned the unrelated relation's
+    size here). A lazy checkpoint reads 0 — no hint — until its first
+    action materializes it."""
+    ckpt = spark.range(100_000).selectExpr("id", "id * 2 AS x").localCheckpoint(
+        eager=True
+    )
+    unrelated = spark.range(10).cache()
+    unrelated.count()
+    try:
+        own_id = ckpt._jdf.queryExecution().analyzed().rdd().id()
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        stored = {i.id(): int(i.memSize() + i.diskSize()) for i in infos}
+        newest = max(stored)
+        assert newest != own_id and stored[newest] < stored[own_id]
+        assert tuning.checkpoint_bytes(ckpt) == stored[own_id]
+
+        lazy = spark.range(1000).localCheckpoint(eager=False)
+        assert tuning.checkpoint_bytes(lazy) == 0
+        lazy.count()
+        assert tuning.checkpoint_bytes(lazy) > 0
+    finally:
+        unrelated.unpersist()
 
 
 def test_udtf_sentence_split_checkpoints_under_the_sort(spark, sf_dir):

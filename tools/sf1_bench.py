@@ -80,6 +80,39 @@ def _get_session(cpus: str):
     return spark
 
 
+# largest value of each integral key dtype the copies are cast back to
+_DTYPE_MAX = {"tinyint": 2**7 - 1, "smallint": 2**15 - 1,
+              "int": 2**31 - 1, "bigint": 2**63 - 1}
+
+
+def shifted_copies(df, offsets: dict[str, int], factor: int):
+    """The union of FACTOR copies of df, copy i shifting each key column
+    by i * offsets[col]. Keys keep their source dtype (so the sf1 schema
+    matches the fixtures); a factor whose last copy would not fit that
+    dtype raises instead of wrapping silently."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    dtypes = dict(df.dtypes)
+    maxes = df.agg(*[F.max(c) for c in offsets]).collect()[0]
+    for (col, off), mx in zip(offsets.items(), maxes):
+        top = (mx or 0) + (factor - 1) * off
+        if top > _DTYPE_MAX[dtypes[col]]:
+            raise OverflowError(
+                f"{col}: max key {mx} + ({factor}-1)*{off} = {top} "
+                f"does not fit {dtypes[col]}; lower --factor"
+            )
+    return reduce(DataFrame.unionAll, [
+        df.withColumns({
+            col: (F.col(col) + F.lit(i * off)).cast(dtypes[col])
+            for col, off in offsets.items()
+        })
+        for i in range(factor)
+    ])
+
+
 def gen(factor: int) -> None:
     from pyspark.sql import functions as F
 
@@ -103,19 +136,9 @@ def gen(factor: int) -> None:
         raw[t].write.mode("overwrite").parquet(f"{SF1}/{t}.parquet")
         print(t, "copied")
     for t, keys in _KEYS.items():
-        parts = []
-        for i in range(factor):
-            df = raw[t]
-            for col, dom in keys.items():
-                df = df.withColumn(
-                    col, (F.col(col) + F.lit(i * offsets[dom])).cast(
-                        dict(raw[t].dtypes)[col]
-                    )
-                )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
+        out = shifted_copies(
+            raw[t], {col: offsets[dom] for col, dom in keys.items()}, factor
+        )
         # ~8 comfortable files per table at this size (guide §6)
         out.repartition(8).write.mode("overwrite").parquet(
             f"{SF1}/{t}.parquet"
