@@ -1,167 +1,206 @@
-"""Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: time registered queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "loadavg": [...]}.
+
+Usage: python bench.py [--duckdb] [name ...]
+
+- no arguments: every registered query except the ``bench-skip``
+  verification harnesses (the driver's run);
+- names: only those queries (the sf1 leg runs ``plans/sf1_queries.txt``);
+- ``--duckdb``: only oracled queries, each one's DuckDB twin timed
+  right after its Spark runs, so a host-load burst hits both engines
+  nearly equally and the Spark/DuckDB ratio stays comparable.
+
+Other inputs: BENCH_ITERS (runs per query, default 2) and
+SPARK_GRAFT_CACHE_TABLES (default 1: persist each base table once per
+session instead of re-scanning parquet per query).
 
 Output contract (learned from round 1, VERDICT.md): the driver keeps only
 the ~4 KB TAIL of stdout and json-parses the final line, so the final
 line must be compact — per-query timings are rounded to 2 decimals and
-the line is kept well under 4 KB. Full-precision per-run timings go to
-bench_detail.json next to this file (and to an earlier stdout line for
-humans); neither is load-bearing for the driver.
+the line is kept well under 4 KB. Full-precision per-run timings, the
+DuckDB runs and any failures go to bench_detail.json next to this file
+(gitignored and overwritten on every run; copy it to keep it). A query
+that raises is recorded there under ``failed`` and the process exits
+non-zero without a summary line.
 
-Each query is timed over BENCH_ITERS runs (default 2) and the MINIMUM is
-reported: round 1's driver numbers had single-run spikes (8 s for a
-15 k-row INTERSECT) that were JVM/GC noise, not plan cost. Execution is
-forced with the noop sink (computes every row, writes nothing) so lazy
-plans can't cheat, and session/JVM warmup is excluded via a separate
-warmup run.
+Each query is timed over BENCH_ITERS runs and the MINIMUM is reported:
+round 1's driver numbers had single-run spikes (8 s for a 15 k-row
+INTERSECT) that were JVM/GC noise, not plan cost. Execution is forced
+with the noop sink (computes every row, writes nothing) so lazy plans
+can't cheat, and session/JVM warmup is excluded via a separate warmup
+run. Every query runs on get_spark's session conf (AQE on, shuffle
+partitions = CPUS), the conf perfbench uses.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_integration_tool_spark import benchconf, registry
+from data_integration_tool_spark import registry
 from data_integration_tool_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
+)
 
 
-def _run(df) -> None:
+def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
-    os.environ["SPARK_GRAFT_CPUS"] = CPUS
-    # one session, ~90 queries: persist each base table once instead of
-    # re-scanning parquet per query (io.load honors this flag)
-    os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-    spark = get_spark(app_name="bench", shuffle_partitions=int(CPUS))
-    spark.sparkContext.setLogLevel("ERROR")
-    # keep the driver's stdout-tail parse window clean of the benign
-    # accumulator-race ERROR spew (see benchconf for the root cause)
-    benchconf.silence_dagscheduler_accumulator_spew(spark)
+def _runs(fn, iters: int) -> list[float]:
+    out = []
+    for _ in range(iters):
+        t0 = time.perf_counter()
+        fn()
+        out.append(time.perf_counter() - t0)
+    return out
 
-    specs = registry.specs()
-    # warmup: JVM + parquet footer caches, excluded from timings
-    _run(specs["agg_group"].builder(spark, SF_DIR))
 
-    # Per-workload conf split (shuffle partitions + AQE). The sets and
-    # their measured rationale live in benchconf — the ONE source of
-    # truth shared with tools/interleaved_bench.py (ADVICE r12 #1), so
-    # the burst-robust interleaved ratio always compares like-for-like
-    # with these legs.
-    heavy = benchconf.heavy_set(specs)
-    aqe_pinned = benchconf.aqe_pinned_set(specs)
-
-    iters = max(1, int(os.environ.get("BENCH_ITERS", "2")))
-    per_run: dict[str, list[float]] = {}
-    skipped = [n for n, s in specs.items() if "bench-skip" in s.tags]
-    if skipped:
-        # no silent caps: correctness-harness queries (they run the
-        # operator AND its twin plus staging I/O) are excluded from the
-        # throughput total, visibly
-        print(f"bench-skip (verification harnesses, not timed): {skipped}",
-              file=sys.stderr)
-    for name in sorted(set(specs) - set(skipped)):
-        benchconf.apply_query_conf(spark, name, heavy, aqe_pinned, CPUS)
-        runs = []
-        for _ in range(iters):
-            t0 = time.perf_counter()
-            _run(specs[name].builder(spark, SF_DIR))
-            runs.append(time.perf_counter() - t0)
-        per_run[name] = runs
-
-    # min over iterations: single-run numbers at this scale carry JVM/GC
-    # spikes that say nothing about the plan (round-1 driver measured 8 s
-    # for a 15 k-row INTERSECT that reruns at <0.5 s)
-    timings = {name: round(min(runs), 2) for name, runs in per_run.items()}
-    # None (not a crash) when the dir does not follow the sf<N>
-    # convention (ADVICE r12 #3)
-    sf = benchconf.parse_sf(SF_DIR)
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.path.join(repo_dir, "bench_detail.json")
-    detail = {
-        "iters": iters,
-        "sf": sf,
-        "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
-        "loadavg": [round(x, 2) for x in os.getloadavg()],
-        "runs": per_run,
-    }
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1)
-    # Archive a per-round copy so per-query regressions stay diffable
-    # across rounds (bench_detail.json is overwritten on every run).
-    # The round number comes from SPARK_GRAFT_ROUND when set; otherwise
-    # it is inferred from the driver's BENCH_r{N}.json trail (the run
-    # happening now belongs to round max(N)+1). The archive name is
-    # keyed on (round, cpus) — VERDICT r13 Next #2: the driver's 8-core
-    # r13 scaling leg ran after BENCH_r13.json existed, inferred round
-    # 14, and squatted the 32-core name bench_detail_r14.json, which
-    # would have silently skipped the real r14 archive and destroyed
-    # the round-over-round per-query comparison. Non-32-core legs now
-    # archive as bench_detail_r{N}_c{CPUS}.json. Builder-side legs set
-    # SPARK_GRAFT_BENCH_TAG to archive under an explicit leg name and
-    # stay out of the driver's slots entirely. An existing archive is
-    # never overwritten — re-runs within a round keep the first
-    # (driver-aligned) detail file intact.
-    import glob as _glob
-    import re as _re
-
-    tag = os.environ.get("SPARK_GRAFT_BENCH_TAG")
-    if tag and _re.fullmatch(r"[\w.-]+", tag):
-        archive = os.path.join(repo_dir, f"bench_detail_{tag}.json")
-    else:
-        round_env = os.environ.get("SPARK_GRAFT_ROUND")
-        if round_env and round_env.isdigit():
-            round_no = int(round_env)
-        else:
-            rounds = [
-                int(m.group(1))
-                for p in _glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-                if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-            ]
-            round_no = max(rounds) + 1 if rounds else None
-        if round_no is None or sf != 0.1:
-            archive = None
-        elif CPUS == "32":
-            archive = os.path.join(repo_dir, f"bench_detail_r{round_no:02d}.json")
-        else:
-            archive = os.path.join(
-                repo_dir, f"bench_detail_r{round_no:02d}_c{CPUS}.json"
-            )
-    if archive is not None and not os.path.exists(archive):
-        with open(archive, "w") as f:
-            json.dump(detail, f, indent=1)
-
+def summary_line(timings: dict[str, float], sf: float | None,
+                 duckdb_total: float | None = None) -> str:
+    """The driver-facing final stdout line, kept under 3500 bytes."""
     summary = {
         "metric": "total_query_wall_sec",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # 1/5/15-min load average at measurement time: co-tenant load on
-        # the driver box inflated r04/r05 totals ~1.5x uniformly
-        # (BASELINE.md), so the claim must be self-evidencing per run
+        # 1/5/15-min load average at measurement time: co-tenant load
+        # inflated r04/r05 totals ~1.5x uniformly (BASELINE.md), so the
+        # claim must be self-evidencing per run
         "loadavg": [round(x, 2) for x in os.getloadavg()],
     }
+    if duckdb_total is not None:
+        summary["duckdb_value"] = round(duckdb_total, 4)
+        summary["ratio_spark_over_duckdb"] = round(
+            summary["value"] / duckdb_total, 3
+        )
     line = json.dumps(summary, separators=(",", ":"))
     if len(line) > 3500:
         # driver keeps only the ~4 KB tail of stdout and parses the final
         # line — never let the summary outgrow that window
-        summary["queries"] = {"detail": detail_path}
+        summary["queries"] = {"detail": DETAIL_PATH}
         line = json.dumps(summary, separators=(",", ":"))
+    return line
+
+
+def run(spark, specs, names: list[str], sf_dir: str, iters: int,
+        con=None) -> tuple[dict, str | None]:
+    """Time each named query, min of ``iters`` noop-sink runs, and its
+    DuckDB twin right after it when ``con`` is given. Returns the detail
+    record and the summary line; the line is None when any query
+    raised (its first message line is recorded under ``failed``)."""
+    runs: dict[str, list[float]] = {}
+    duck: dict[str, list[float]] = {}
+    failed: dict[str, str] = {}
+    for name in names:
+        spec = specs[name]
+        try:
+            s_runs = _runs(lambda: _noop(spec.builder(spark, sf_dir)), iters)
+            if con is not None:
+                duck[name] = _runs(
+                    lambda: con.execute(spec.oracle).fetchall(), iters
+                )
+        except Exception as exc:  # recorded, then the whole run fails
+            failed[name] = str(exc).split("\n")[0][:200]
+            print(f"{name} FAILED:", file=sys.stderr)
+            traceback.print_exc()
+            continue
+        runs[name] = s_runs
+
+    # min over iterations: single-run numbers at this scale carry JVM/GC
+    # spikes that say nothing about the plan
+    timings = {name: round(min(r), 2) for name, r in runs.items()}
+    # scale factor from a .../sfN.NN dir name; None (not a crash) when
+    # the dir does not follow the convention
+    sf = re.search(r"sf(\d+(?:\.\d+)?)/?$", sf_dir)
+    detail = {
+        "iters": iters,
+        "sf": float(sf.group(1)) if sf else None,
+        "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
+        "loadavg": [round(x, 2) for x in os.getloadavg()],
+        "runs": runs,
+        "failed": failed,
+    }
+    duckdb_total = None
+    if con is not None:
+        duckdb_total = sum(min(r) for r in duck.values())
+        detail["duckdb"] = duck
+        detail["ratio_spark_over_duckdb"] = round(
+            sum(timings.values()) / duckdb_total, 3
+        ) if duckdb_total else None
+    if failed:
+        return detail, None
+    return detail, summary_line(timings, detail["sf"], duckdb_total)
+
+
+def main(argv: list[str]) -> None:
+    duckdb = "--duckdb" in argv
+    names = [a for a in argv if a != "--duckdb"]
+    os.environ["SPARK_GRAFT_CPUS"] = CPUS
+    os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
+
+    specs = registry.specs()
+    unknown = sorted(set(names) - set(specs))
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    if not names:
+        skipped = [n for n, s in specs.items() if "bench-skip" in s.tags]
+        # no silent caps: correctness-harness queries (they run the
+        # operator AND its twin plus staging I/O) are excluded from the
+        # throughput total, visibly
+        print(f"bench-skip (verification harnesses, not timed): {skipped}",
+              file=sys.stderr)
+        names = sorted(set(specs) - set(skipped))
+    if duckdb:
+        names = [n for n in names if specs[n].oracle is not None]
+    if not names:
+        sys.exit("no oracled query among the names given")
+
+    spark = get_spark(app_name="bench", shuffle_partitions=int(CPUS))
+    spark.sparkContext.setLogLevel("ERROR")
+    # A known-benign Spark race: a straggler task reports its SQL-metric
+    # accumulators after the stage's registration was dropped, and
+    # DAGScheduler logs "Failed to update accumulator" at ERROR (more
+    # often with lazy localCheckpoints). Results are unaffected, but
+    # ERROR lines near the summary in the driver's ~4 KB stdout tail are
+    # a parse hazard; real failures still raise on the query itself.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.scheduler.DAGScheduler",
+        jvm.org.apache.logging.log4j.Level.FATAL,
+    )
+    con = None
+    if duckdb:
+        from tests.oracle_check import duck_connect
+
+        con = duck_connect(SF_DIR)
+        con.execute(specs["agg_group"].oracle).fetchall()
+    # warmup: JVM + parquet footer caches, excluded from timings
+    _noop(specs["agg_group"].builder(spark, SF_DIR))
+
+    iters = max(1, int(os.environ.get("BENCH_ITERS", "2")))
+    detail, line = run(spark, specs, names, SF_DIR, iters, con)
+    with open(DETAIL_PATH, "w") as f:
+        json.dump(detail, f, indent=1)
+    if line is None:
+        sys.exit(f"{len(detail['failed'])} queries failed: "
+                 f"{sorted(detail['failed'])} (see {DETAIL_PATH})")
     sys.stdout.flush()
     print(line)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -151,30 +151,48 @@ def test_tpch_composites_broadcast_dims_and_take_ordered(spark, sf_dir):
 
 def test_bench_summary_line_fits_driver_tail():
     """The driver json-parses the FINAL stdout line from a ~4 KB tail
-    buffer (VERDICT r1): simulate bench.py's summary construction for
-    the current registry and assert the emitted line stays under the
-    3500-byte guard — or, if it ever outgrows it, that the guard's
-    file-pointer fallback produces a small valid line."""
+    buffer (VERDICT r1): build bench.py's real summary line for the
+    current registry, plain and --duckdb shaped, and assert it stays
+    under the 3500-byte guard — or, if it ever outgrows it, that the
+    guard's file-pointer fallback produces a small valid line."""
     import json
 
+    import bench
     from data_integration_tool_spark import registry
 
     specs = registry.specs()
     # worst-case realistic timings: three digits + two decimals each
     fake = {name: 999.99 for name in specs}
-    summary = {
-        "metric": "total_query_wall_sec",
-        "value": round(sum(fake.values()), 4),
-        "unit": "sec",
-        "queries": fake,
-        "sf": 0.1,
+    oracled = {name: 999.99 for name, s in specs.items() if s.oracle}
+    for line in (
+        bench.summary_line(fake, 0.1),
+        bench.summary_line(oracled, 0.1, duckdb_total=999.99),
+    ):
+        assert len(line) < 3900, len(line)
+        json.loads(line)  # stays parseable either way
+
+
+def test_bench_run_fails_loud(spark, sf_dir, capsys):
+    """A query that raises is recorded under ``failed`` with its first
+    message line, the other queries keep their timings, and no summary
+    line comes back — bench.py then exits non-zero instead of printing
+    a total that silently lacks the query."""
+    import bench
+    from data_integration_tool_spark import registry
+
+    def broken(spark, sf_dir):
+        raise RuntimeError("builder exploded\nsecond line")
+
+    specs = {
+        "agg_group": registry.specs()["agg_group"],
+        "broken": registry.QuerySpec("broken", broken, None),
     }
-    line = json.dumps(summary, separators=(",", ":"))
-    if len(line) > 3500:
-        summary["queries"] = {"detail": "/root/repo/bench_detail.json"}
-        line = json.dumps(summary, separators=(",", ":"))
-    assert len(line) < 3900, len(line)
-    json.loads(line)  # stays parseable either way
+    detail, line = bench.run(spark, specs, ["agg_group", "broken"], sf_dir, 1)
+    assert line is None
+    assert detail["failed"] == {"broken": "builder exploded"}
+    assert list(detail["runs"]) == ["agg_group"]
+    assert len(detail["runs"]["agg_group"]) == 1
+    assert capsys.readouterr().out == ""
 
 
 def test_join_strategy_advisor_consistent(spark, sf_dir):

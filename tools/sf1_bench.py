@@ -1,12 +1,12 @@
-"""sf1 mini-bench (VERDICT r13 Next #4): make scale visible.
+"""sf1 data generator (VERDICT r13 Next #4): make scale visible.
 
 At sf0.1 the c8/c32 geomean across the registry is 0.95 — ~95% of
 queries are stage-floor-bound and cannot demonstrate a distributed win
-or regression. This tool (1) builds a deterministic 10x dataset
-("sf1") from the read-only sf0.1 fixtures by FK-consistent key-shifted
-replication, and (2) runs the most expensive queries at sf1 with the
-standard bench confs, min-of-N, noop sink, so the heavy class can show
-whether it actually parallelizes (c8 vs c32 at sf1).
+or regression. This tool builds a deterministic 10x dataset ("sf1")
+from the read-only sf0.1 fixtures by FK-consistent key-shifted
+replication; bench.py then times the most expensive queries on it, so
+the heavy class can show whether it actually parallelizes (c8 vs c32
+at sf1).
 
 The generated data lives in scratch/sf1 (gitignored). It is INPUT
 data for timing only — no query result is persisted, every run
@@ -25,20 +25,17 @@ byte-identical. Powers of 10 are ≡ 0 mod 5, so `key % 5` filters
 select the same subset in every copy.
 
 Usage:
-  python tools/sf1_bench.py gen  [--factor=10]
-  python tools/sf1_bench.py run  [q1 q2 ...] [--iters=3] [--top=25]
-      (no names: the --top most expensive queries by the r13+r14
-       cross-leg minima, plus graph_kcore)
+  python tools/sf1_bench.py gen [--factor=10]
+  SPARK_GRAFT_SF_DIR=scratch/sf1 BENCH_ITERS=3 \
+      python bench.py $(cat plans/sf1_queries.txt)
+(plans/sf1_queries.txt: the 25 most expensive queries by the r13+r14
+cross-leg minima at sf0.1, plus graph_kcore)
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -69,15 +66,6 @@ _DOMAIN_SOURCE = {  # domain -> (table, column) that defines its max
     "vec": ("embeddings", "vec_id"),
 }
 _COPY_ASIS = ("region", "nation")
-
-
-def _get_session(cpus: str):
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-    from data_integration_tool_spark.session import get_spark
-
-    spark = get_spark(app_name="sf1_bench", shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 # largest value of each integral key dtype the copies are cast back to
@@ -116,7 +104,11 @@ def shifted_copies(df, offsets: dict[str, int], factor: int):
 def gen(factor: int) -> None:
     from pyspark.sql import functions as F
 
-    spark = _get_session(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from data_integration_tool_spark.session import get_spark
+
+    cpus = os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark(app_name="sf1_bench", shuffle_partitions=int(cpus))
+    spark.sparkContext.setLogLevel("ERROR")
     # raw reads (nanosAsLong for the NANOS-encoded events generation)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = {
@@ -147,75 +139,6 @@ def gen(factor: int) -> None:
         print(t, "x", factor, "->", n, "rows")
 
 
-def default_queries(top: int) -> list[str]:
-    """Most expensive queries by cross-leg per-query minima over the
-    committed r13/r14 detail files."""
-    mins: dict[str, float] = {}
-    for p in glob.glob(os.path.join(REPO, "bench_detail_r1[34]*.json")):
-        runs = json.load(open(p)).get("runs", {})
-        for q, v in runs.items():
-            m = min(v)
-            if q not in mins or m < mins[q]:
-                mins[q] = m
-    names = [q for q, _ in sorted(mins.items(), key=lambda kv: -kv[1])]
-    out = names[:top]
-    if "graph_kcore" not in out:
-        out.append("graph_kcore")
-    return out
-
-
-def run(names: list[str], iters: int) -> None:
-    from data_integration_tool_spark import benchconf, registry
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-    spark = _get_session(cpus)
-    benchconf.silence_dagscheduler_accumulator_spew(spark)
-    specs = registry.specs()
-    heavy = benchconf.heavy_set(specs)
-    aqe = benchconf.aqe_pinned_set(specs)
-    # warmup
-    specs["agg_group"].builder(spark, SF1).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out = {}
-    failed = {}
-    for name in names:
-        benchconf.apply_query_conf(spark, name, heavy, aqe, cpus)
-        runs = []
-        try:
-            for _ in range(iters):
-                t0 = time.perf_counter()
-                specs[name].builder(spark, SF1).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-        except Exception as exc:  # scale hazard surfaced loudly — record it
-            failed[name] = str(exc).split("\n")[0][:200]
-            print(f"{name:32s} FAILED: {failed[name]}", flush=True)
-            continue
-        out[name] = runs
-        print(
-            f"{name:32s} {min(runs):7.2f}/{statistics.median(runs):7.2f}"
-            f"  min/med of {iters}, load {os.getloadavg()[0]:.1f}",
-            flush=True,
-        )
-    summary = {
-        "sf_dir": SF1,
-        "cpus": int(cpus),
-        "iters": iters,
-        "loadavg": [round(x, 2) for x in os.getloadavg()],
-        "runs": out,
-        "failed": failed,
-        "total_min_sec": round(sum(min(v) for v in out.values()), 2),
-    }
-    path = os.path.join(REPO, "scratch", f"sf1_bench_c{cpus}.json")
-    with open(path, "w") as f:
-        json.dump(summary, f, indent=1)
-    print(json.dumps({k: round(min(v), 2) for k, v in out.items()}))
-    print("total(min):", summary["total_min_sec"], "->", path)
-
-
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     opts = {
@@ -227,14 +150,9 @@ def main() -> None:
     if not args:
         print(__doc__)
         return
-    cmd, rest = args[0], args[1:]
-    if cmd == "gen":
-        gen(int(opts.get("factor", "10")))
-    elif cmd == "run":
-        names = rest or default_queries(int(opts.get("top", "25")))
-        run(names, int(opts.get("iters", "3")))
-    else:
-        raise SystemExit(f"unknown command {cmd!r}")
+    if args != ["gen"]:
+        raise SystemExit(f"unknown command {' '.join(args)!r}")
+    gen(int(opts.get("factor", "10")))
 
 
 if __name__ == "__main__":

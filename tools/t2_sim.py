@@ -2,16 +2,19 @@
 the first 50 registry entries (the driver's recording window) from a
 vanilla session — oracled queries get the raw-cell compare (with the
 calibrated ULP allowlist), rows-only get the rows>0 check."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract  # noqa: E402
-import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-from oracle_check import TOLERANT_QUERIES, compare_frames  # noqa: E402
+from tests.oracle_check import (  # noqa: E402
+    TOLERANT_QUERIES,
+    compare_frames,
+    duck_connect,
+)
 
 SF = "/root/testdata/sf0.01"
 
@@ -22,12 +25,7 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 qs, os_ = contract.queries(), contract.oracle_sql()
-con = duckdb.connect()
-for t in ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split():
-    con.execute(
-        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-    )
+con = duck_connect(SF)
 ok = bad = 0
 for i, name in enumerate(list(qs)[:50], 1):
     try:
